@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR at
-  * local[32] and prints ONE JSON line the driver records as BENCH_r{N}.
+/** Benchmark main — runs the headline queries on [[Engine.sfDir]] in an
+  * [[Engine.session]] of [[Engine.cpus]] threads and prints ONE JSON line
+  * the driver records as BENCH_r{N}.
   *
   * Execution is forced through the noop sink (full computation, no result
   * materialization cost) rather than count(), which would let Catalyst
@@ -18,19 +17,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Engine.sfDir
+    val spark = Engine.session(Engine.cpus, "graft-bench")
 
     val names = Registry.headline
     def run(name: String): Double = {

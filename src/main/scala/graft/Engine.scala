@@ -17,6 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * join_reordering_strategy=AUTOMATIC, iterative/rule/ReorderJoins.java).
   */
 object Engine {
+  /** Worker threads (`local[N]`) for the mains: SPARK_GRAFT_CPUS, else 32. */
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Scale-factor directory the mains read: SPARK_GRAFT_SF_DIR, else sf0.1. */
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The one session builder of `src/main`: Bench, Verify, PlanDump,
+    * StressRehearsal and the benchmark harness all measure this engine. */
   def session(cores: Int = 32, app: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -38,7 +46,8 @@ object Engine {
   }
 
   /** Idempotent per-session setup usable on externally-built sessions too
-    * (Verify/Bench build their own session from the driver contract).
+    * (the test specs' sessions, and any session Spark hands back through
+    * `getOrCreate`).
     */
   def configure(spark: SparkSession): SparkSession = {
     functions.GraftFunctions.register(spark)

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for a set of declared queries into text
   * files — the optimization rounds' evidence trail (plans/r17/<q>_before.txt
-  * / _after.txt). Sessions are built exactly like [[Bench]]'s so the plans
-  * match what the bench times: same master, same AQE/shuffle confs, same
-  * extensions. Queries that build scratch MoR tables lazily (marker files)
+  * / _after.txt). The session is [[Engine.session]], the one every main
+  * and the benchmark harness run on, so the plans are the ones they time.
+  * Queries that build scratch MoR tables lazily (marker files)
   * are materialized by executing `fn` once before the explain, mirroring the
   * bench's prewarm pass.
   *
@@ -18,19 +16,8 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = if (args.length > 2) args.drop(2).toSeq else Registry.headline
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Engine.sfDir
+    val spark = Engine.session(Engine.cpus, "graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df =

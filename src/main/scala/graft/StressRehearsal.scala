@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Failure-mode rehearsals the plain timing runs can't show (VERDICT r7
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * `spill` mode — run under a deliberately small heap
   * (`SPARK_DRIVER_MEM=4g tools/stress.sh spill`): q18 and the minhash
-  * pipeline on 10×-replicated data (the ScaleRehearsal replication) must
+  * pipeline on 10×-replicated data (key-shifted copies of each table) must
   * COMPLETE, with the spill bytes the reference makes explicit in its own
   * machinery (`SpillableHashAggregationBuilder.java`,
   * `FileSingleStreamSpiller.java`) reported from Spark's task metrics.
@@ -41,38 +41,29 @@ object StressRehearsal {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("spill")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Engine.sfDir
     val R = sys.env.getOrElse("SPARK_GRAFT_STRESS_R", "10").toInt
     // spill mode uses FEWER, FATTER shuffle partitions: per-task state is
     // what exhausts execution memory; 32 thin partitions at rehearsal SF
     // never would (a 100 TB task's partition is fat by definition)
     val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", if (mode == "spill") "8" else cpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (mode match {
-      case "skew" => b
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", if (mode == "spill") "8" else Engine.cpus.toString)
+    val spark = Engine.session(Engine.cpus, s"graft-stress-$mode")
+    // per-mode confs are all runtime SQL confs, set on the shared session
+    (Seq("spark.sql.shuffle.partitions" -> shuffleParts) ++ (mode match {
+      case "skew" => Seq(
         // face the skew in the shuffle join (a broadcast would dodge it)
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
         // rehearsal-sized skew thresholds: the defaults (256m) target
         // multi-GB production partitions, and the sizes AQE sees are
         // POST-compression shuffle bytes (~2MB median here)
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "3m")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "512k")
-      case _ => b
-    }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark)
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "3m",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512k")
+      case _ => Nil
+    })).foreach { case (k, v) => spark.conf.set(k, v) }
 
     def rep(name: String)(f: (DataFrame, Int) => DataFrame): DataFrame = {
       val base = Tables.t(spark, sfDir, name)

@@ -502,7 +502,7 @@ object Tpcds {
       // r18 fold (guide §2.4): the `sp` CTE was inlined under BOTH the
       // agg-of-agg (`sa`) and the join back to it, so the lineitem
       // aggregate ran twice (plans/r18/..._before.txt: two Scan+Exchange+
-      // HashAggregate towers; TimeQ: two ~750 ms jobs). The supplier mean
+      // HashAggregate towers; two ~750 ms jobs, OPTIMIZATION_r18.md step 3). The supplier mean
       // is the per-sk SUM/COUNT over sp's rows, so a window over ONE sp
       // pass computes the identical value (decimal window SUM is the same
       // exact-associative decimal sum; COUNT(*) identical; sk-null rows

@@ -171,7 +171,7 @@ object MorDelete {
 
   /** Driver-side parquet SCHEMA memo. Construction-time schema inference
     * (a footer read per distinct file set) measured 70–90 ms per MoR read
-    * construction at bench scale (ProbeMorParts, r18) and repeats
+    * construction at bench scale (OPTIMIZATION_r18.md step 2) and repeats
     * identically for every read of an unchanged snapshot. Keyed on the
     * exact path set plus each entry's (length, mtime), so any rewrite,
     * append, compaction or vacuum changes the key and re-infers. This

@@ -45,4 +45,33 @@ class InventorySpec extends AnyFunSuite {
     // and overrides must cover every headline name that differs from all
     assert(Registry.headline.toSet.subsetOf(Registry.bench.keySet))
   }
+
+  private def read(f: java.io.File): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  test("Engine.session is the only SparkSession builder in src/main") {
+    // one session factory: every main measures the engine perfbench measures
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val builders = files(new java.io.File("src/main/scala"))
+      .filter(f => f.getName.endsWith(".scala") &&
+        """SparkSession\s*\.\s*builder""".r.findFirstIn(read(f)).isDefined)
+      .map(_.getPath)
+    assert(builders == Seq("src/main/scala/graft/Engine.scala"), builders.mkString(", "))
+  }
+
+  test("every runMain named in the docs and scripts resolves to a main") {
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md").map(new java.io.File(_)) ++
+      new java.io.File("tools").listFiles().toSeq.filter(_.getName.endsWith(".sh"))
+    val named = docs.flatMap(f =>
+      """runMain\s+(graft\.[\w.]+)""".r.findAllMatchIn(read(f)).map(m => f.getPath -> m.group(1)))
+    assert(named.map(_._2).toSet.contains("graft.Verify"), named.mkString(", "))
+    named.foreach { case (doc, main) =>
+      val cls = try Class.forName(main, false, getClass.getClassLoader)
+        catch { case _: ClassNotFoundException => fail(s"$doc runs $main, which does not exist") }
+      assert(cls.getMethods.exists(_.getName == "main"), s"$doc runs $main, which has no main")
+    }
+  }
 }

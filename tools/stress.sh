@@ -1,5 +1,7 @@
 #!/bin/sh
-# Failure-mode rehearsals (see StressRehearsal.scala):
+# The rehearsal entry point: failure modes the timing runs cannot show,
+# one mode per run (StressRehearsal.scala, on Engine.session; earlier
+# scale rehearsals are recorded in SCALE_r*.md):
 #   tools/stress.sh spill   — q18 + minhash at 10x under a 4g heap: must
 #                             COMPLETE by spilling (task-metric spill bytes
 #                             reported), not OOM.
