@@ -1,9 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ReduceAgg, ReduceAggPlaceholder}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{
+  Alias, Attribute, CaseWhen, Cast, ExprId, Expression, If, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{
+  AggregateExpression, Dsum8, ReduceAgg, ReduceAggPlaceholder, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.AGGREGATE_EXPRESSION
+import org.apache.spark.sql.types._
 
 /** Swaps the fully-bound [[ReduceAggPlaceholder]] for the real mergeable
   * aggregate. Runs inside the analyzer's fixed-point Resolution batch (where
@@ -20,6 +25,54 @@ object ResolveReduceAgg extends Rule[LogicalPlan] {
   }
 }
 
+/** Runs the engine's exact money sum `SUM(CAST(e AS DECIMAL(30,8)))` on
+  * Dsum8's two-long buffer: a non-DISTINCT sum of a DECIMAL(30,8) input
+  * `c`, in an `Aggregate` or a `Window`, becomes `Dsum8(c, exactDecimal =
+  * true)` (`dsum8_dec`) — same per-row decimals, same DECIMAL(38,8) type
+  * and value (Dsum8Spec), same FILTER and result id, so whatever sits
+  * above it is unchanged. It fires only when `c` is the cast of a DOUBLE
+  * or integral `e`, because Dsum8 raises at |e| ≥ 9.2e10 where the decimal
+  * sum goes on. By the time the rule runs, the optimizer may have pushed
+  * the cast into CASE / IF branches beside constants, and a window's input
+  * is a column defined further down. Exclude it with
+  * `spark.sql.optimizer.excludedRules = graft.FixedPointSum`.
+  */
+object FixedPointSum extends Rule[LogicalPlan] {
+  private val Dec30_8 = DecimalType(30, 8)
+  private val FromTypes = Set[DataType](DoubleType, ByteType, ShortType, IntegerType, LongType)
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(AGGREGATE_EXPRESSION)) {
+      case p @ (_: Aggregate | _: Window) =>
+        lazy val defs = definitions(p.children.head)
+        p.transformExpressions {
+          case ae @ AggregateExpression(Sum(c, _), _, false, _, _)
+              if c.dataType == Dec30_8 && fromDouble(c, defs) =>
+            ae.copy(aggregateFunction = Dsum8(c, exactDecimal = true))
+        }
+    }
+
+  /** Aliases defined down `p`'s single-child spine, by id. */
+  private def definitions(p: LogicalPlan): Map[ExprId, Expression] = {
+    val here = p.expressions.collect { case a: Alias => a.exprId -> a.child }.toMap
+    p match {
+      case u: UnaryNode => definitions(u.child) ++ here
+      case _ => here
+    }
+  }
+
+  /** Whether each value of `c` is a DOUBLE or integral cast, or a constant. */
+  private def fromDouble(c: Expression, defs: => Map[ExprId, Expression]): Boolean = c match {
+    case Cast(e, Dec30_8, _, _) => FromTypes.contains(e.dataType)
+    case _: Literal => true
+    case CaseWhen(branches, other) =>
+      branches.forall(b => fromDouble(b._2, defs)) && other.forall(fromDouble(_, defs))
+    case If(_, t, f) => fromDouble(t, defs) && fromDouble(f, defs)
+    case a: Attribute => defs.get(a.exprId).exists(fromDouble(_, defs))
+    case _ => false
+  }
+}
+
 /** Graft's Spark session extensions — install with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
   * `.withExtensions(new GraftExtensions)`) on the session builder, the same
@@ -28,6 +81,8 @@ object ResolveReduceAgg extends Rule[LogicalPlan] {
   * single-pass fold (see Rewrites) instead of the mergeable aggregate.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => ResolveReduceAgg)
+    ext.injectOptimizerRule(_ => FixedPointSum)
+  }
 }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - floating aggregates go through exact decimal sums
   *    (`CAST(SUM(CAST(x AS DECIMAL(p,s))) AS DOUBLE)`) so partial-aggregation
   *    order cannot perturb low bits — decimal addition is associative.
+  *    Both texts spell it so; [[FixedPointSum]] runs Spark's on Dsum8.
   */
 final case class Q(
     fn: (SparkSession, String) => DataFrame,
@@ -26,124 +27,7 @@ object Q {
 
   /** SQL query with per-dialect texts (Spark first, DuckDB second). */
   def sql(spark: String, duck: String, headline: Boolean = false): Q =
-    Q((s, dir) => { Tables.ensure(s, dir); s.sql(fixedPointRewrite(spark)) },
-      Some(duck), headline)
-
-  /** Rewrites the engine's canonical exact-decimal-sum pattern
-    * `CAST(SUM(CAST(<e> AS DECIMAL(30,8))) AS DOUBLE)` to `dsum8(<e>)` in
-    * the SPARK-side text only — a provable bitwise identity (Dsum8's
-    * scaladoc; Dsum8Spec) that swaps the BigDecimal-boxed 38-digit sum
-    * buffer for a codegen'd two-long fixed-point accumulator (measured
-    * 2.7×→1.5× of a plain double sum on the sf0.1 q01 shape,
-    * OPTIMIZATION_r17.md). The DuckDB oracle text is NEVER rewritten, so
-    * every converted query keeps proving the identity end-to-end. Three
-    * passes: the double-cast form → `dsum8`, the decimal-ROUND form →
-    * `dsum8_dec` under the same ROUND, and every remaining bare
-    * `SUM(CAST(.. AS DECIMAL(30,8)))` → `dsum8_dec` (type- and
-    * value-identical DECIMAL(38,8), so HAVING compares and decimal
-    * arithmetic above it are unchanged). Other precisions/scales are left
-    * alone. Single-quoted literals are skipped by the paren scan so a ')'
-    * inside a string cannot derail it.
-    */
-  private[graft] def fixedPointRewrite(text: String): String = {
-    // pass 1: CAST(SUM(CAST(e AS DECIMAL(30,8))) AS DOUBLE)  → dsum8(e)
-    // pass 2: CAST(ROUND(SUM(CAST(e AS DECIMAL(30,8))), k) AS DOUBLE)
-    //           → CAST(ROUND(dsum8_dec(e), k) AS DOUBLE)
-    //         (ROUND runs on the identical exact decimal either way)
-    // a trailing FILTER (WHERE …) clause stays on the built-in SUM: the
-    // temp-function registration path cannot carry a filter clause
-    // (parser: "aggregateexpression does not support FILTER CLAUSE")
-    def filtered(rest: String): Boolean =
-      rest.dropWhile(_.isWhitespace).startsWith("FILTER")
-    val p1 = rewriteOne(text, "CAST(SUM(CAST(", " AS DECIMAL(30,8))) AS DOUBLE)",
-      (inner, rest) => if (filtered(rest)) null else (s"dsum8($inner)", 0))
-    val p2 = rewriteOne(p1, "CAST(ROUND(SUM(CAST(", " AS DECIMAL(30,8))), ",
-      (inner, rest) => {
-        // rest begins after the marker: "<digits>) AS DOUBLE)..." — only a
-        // literal scale digits-run completes the pattern
-        val d = rest.takeWhile(_.isDigit)
-        if (d.nonEmpty && rest.startsWith(") AS DOUBLE)", d.length))
-          (s"CAST(ROUND(dsum8_dec($inner), $d) AS DOUBLE)",
-            d.length + ") AS DOUBLE)".length)
-        else null // not the full pattern — leave untouched
-      })
-    // pass 3: every remaining bare SUM(CAST(e AS DECIMAL(30,8))) →
-    // dsum8_dec(e) — value- AND type-identical (DECIMAL(38,8), same null
-    // semantics), so it is sound in any surrounding expression: HAVING
-    // comparisons, window frames, decimal arithmetic. SUM(DISTINCT …)
-    // never matches this head.
-    rewriteOne(p2, "SUM(CAST(", " AS DECIMAL(30,8)))",
-      (inner, rest) => if (filtered(rest)) null else (s"dsum8_dec($inner)", 0))
-  }
-
-  /** One rewrite pass: find `head`, balanced-paren scan (skipping quoted
-    * literals) to `marker` at depth 0, hand (inner, text-after-marker) to
-    * `render` → (replacement, extra chars consumed beyond the marker);
-    * a null render or an unmatched scan leaves the text as-is.
-    */
-  /** First occurrence of `head` at or after `from` that is OUTSIDE any
-    * single-quoted SQL literal ('' = escaped quote) — the outer-scan twin
-    * of the balanced-paren walker's quote skipping, so a pattern occurring
-    * INSIDE a string literal is never rewritten (ADVICE_r17). */
-  private def indexOutsideQuotes(text: String, head: String, from: Int): Int = {
-    var i = from
-    while (i < text.length) {
-      if (text.charAt(i) == '\'') {
-        i += 1
-        while (i < text.length &&
-          (text.charAt(i) != '\'' ||
-            (i + 1 < text.length && text.charAt(i + 1) == '\'' && { i += 1; true })))
-          i += 1
-        i += 1
-      } else if (text.startsWith(head, i)) return i
-      else i += 1
-    }
-    -1
-  }
-
-  private def rewriteOne(text: String, head: String, marker: String,
-      render: (String, String) => (String, Int)): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < text.length) {
-      val j = indexOutsideQuotes(text, head, i)
-      if (j < 0) { sb.append(text.substring(i)); i = text.length }
-      else {
-        sb.append(text.substring(i, j))
-        val innerStart = j + head.length
-        var k = innerStart
-        var depth = 0
-        var end = -1
-        var bad = false
-        while (k < text.length && end < 0 && !bad) {
-          if (depth == 0 && text.startsWith(marker, k)) end = k
-          else text.charAt(k) match {
-            case '\'' => // skip string literal ('' = escaped quote)
-              k += 1
-              while (k < text.length &&
-                (text.charAt(k) != '\'' ||
-                  (k + 1 < text.length && text.charAt(k + 1) == '\'' && { k += 1; true })))
-                k += 1
-              k += 1
-            case '(' => depth += 1; k += 1
-            case ')' => if (depth == 0) bad = true else { depth -= 1; k += 1 }
-            case _ => k += 1
-          }
-        }
-        val rendered =
-          if (end < 0) null
-          else render(text.substring(innerStart, end), text.substring(end + marker.length))
-        if (rendered != null) {
-          sb.append(rendered._1)
-          i = end + marker.length + rendered._2
-        } else { // not the full pattern (other precision/scale) — leave as-is
-          sb.append(head)
-          i = innerStart
-        }
-      }
-    }
-    sb.toString
-  }
+    Q((s, dir) => { Tables.ensure(s, dir); s.sql(spark) }, Some(duck), headline)
 
   /** DataFrame/Dataset-API query with a DuckDB oracle. */
   def df(duck: String, headline: Boolean = false)(

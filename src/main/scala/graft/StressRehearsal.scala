@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * relying on bucket-aware scheduling; Presto 323 has no runtime skew
   * splitting at all — this is a Spark-side capability win) must report
   * `numSkewedPartitions > 0` while the query completes with the right
-  * row count. Skew thresholds are lowered to match rehearsal data sizes
-  * (the defaults target multi-GB partitions).
+  * row count, or the run fails. Skew thresholds are lowered to match
+  * rehearsal data sizes (the defaults target multi-GB partitions).
   */
 object StressRehearsal {
 
@@ -43,14 +43,14 @@ object StressRehearsal {
     val mode = args.headOption.getOrElse("spill")
     val sfDir = Engine.sfDir
     val R = sys.env.getOrElse("SPARK_GRAFT_STRESS_R", "10").toInt
-    // spill mode uses FEWER, FATTER shuffle partitions: per-task state is
-    // what exhausts execution memory; 32 thin partitions at rehearsal SF
-    // never would (a 100 TB task's partition is fat by definition)
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", if (mode == "spill") "8" else Engine.cpus.toString)
     val spark = Engine.session(Engine.cpus, s"graft-stress-$mode")
     // per-mode confs are all runtime SQL confs, set on the shared session
-    (Seq("spark.sql.shuffle.partitions" -> shuffleParts) ++ (mode match {
+    (mode match {
+      // spill modes use FEWER, FATTER shuffle partitions: per-task state
+      // is what exhausts execution memory (a 100 TB task's partition is
+      // fat by definition). skew keeps the session's 32: at a handful the
+      // hot partition is under skewedPartitionFactor × the median.
+      case "spill" | "asofspill" => Seq("spark.sql.shuffle.partitions" -> "8")
       case "skew" => Seq(
         // face the skew in the shuffle join (a broadcast would dodge it)
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -62,8 +62,7 @@ object StressRehearsal {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "512k")
-      case _ => Nil
-    })).foreach { case (k, v) => spark.conf.set(k, v) }
+    }).foreach { case (k, v) => spark.conf.set(k, v) }
 
     def rep(name: String)(f: (DataFrame, Int) => DataFrame): DataFrame = {
       val base = Tables.t(spark, sfDir, name)
@@ -274,14 +273,14 @@ object StressRehearsal {
           .agg(sum(col("l_quantity")).as("qty"), count(lit(1)).as("lines"))
         val t = timed { shape.write.format("noop").mode("overwrite").save() }
         val stats = ExplainAnalyze.run(shape)
-        if (sys.env.contains("SPARK_GRAFT_STRESS_DEBUG"))
-          stats.groupBy(_.op).keys.toSeq.sorted.foreach(op => println(s"[stress-op] $op"))
         def metric(m: String) = stats.filter(s =>
           s.op.startsWith("AQEShuffleRead") && s.metric == m).map(_.value).sum
         val skewedParts = metric("numSkewedPartitions")
         val skewSplits = metric("numSkewedSplits")
         val aqeParts = metric("numPartitions")
         println(f"""[stress] {"mode":"skew","sec":$t%.2f,"skewed_partitions":$skewedParts%d,"skew_splits":$skewSplits%d,"aqe_partitions":$aqeParts%d}""")
+        // the mode exists to show the split; a run without one fails
+        if (skewedParts == 0) { spark.stop(); sys.error("skew: AQE split no partition") }
     }
     spark.stop()
   }

@@ -91,8 +91,8 @@ object Tpcds {
     //      over rollup, the TPC-DS signature chain ----
     // Spark side pre-aggregates on the full (r_name, n_name) key before
     // the ROLLUP (same two-level rewrite as q67: Expand multiplies
-    // pre-summed rows, not fact rows; dsum8_dec keeps the exact decimal
-    // partial, outer decimal re-sum exact by associativity, the ratio's
+    // pre-summed rows, not fact rows; the exact decimal partial is
+    // re-summed exactly by associativity, the ratio's
     // two double casts land above it unchanged). DuckDB keeps the
     // single-level form.
     "tpcds_q36_rollup_rank" -> Q.sql(
@@ -108,8 +108,8 @@ object Tpcds {
           |    CAST(SUM(psn) AS DOUBLE) / CAST(SUM(psd) AS DOUBLE) AS gross_margin
           |  FROM (
           |    SELECT r_name, n_name,
-          |      dsum8_dec(l_extendedprice * (1 - l_discount) - l_quantity * 100.0) AS psn,
-          |      dsum8_dec(l_extendedprice) AS psd
+          |      SUM(CAST(l_extendedprice * (1 - l_discount) - l_quantity * 100.0 AS DECIMAL(30,8))) AS psn,
+          |      SUM(CAST(l_extendedprice AS DECIMAL(30,8))) AS psd
           |    FROM lineitem
           |    JOIN supplier ON s_suppkey = l_suppkey
           |    JOIN nation ON n_nationkey = s_nationkey
@@ -225,9 +225,8 @@ object Tpcds {
     // Spark side pre-aggregates on the full (p_type, p_brand) key BEFORE
     // the ROLLUP so Expand multiplies ~|type×brand| pre-summed rows, not
     // 600k fact rows (measured 1.03 s → 0.40 s on the rollup shape at
-    // sf0.1 — OPTIMIZATION_r17.md). Exact equivalence: dsum8_dec keeps the
-    // full-precision DECIMAL(38,8) partial (= SUM(CAST(.. AS
-    // DECIMAL(30,8))) bitwise, Dsum8Spec), decimal addition is associative
+    // sf0.1 — OPTIMIZATION_r17.md). Exact equivalence: the inner sum keeps
+    // the full-precision DECIMAL(38,8) partial, decimal addition is associative
     // so rollup-of-presums = direct rollup, and the double cast happens
     // once above. The DuckDB oracle keeps the single-level formulation.
     "tpcds_q67_rollup_topk" -> Q.sql(headline = true,
@@ -241,7 +240,7 @@ object Tpcds {
           |    SELECT p_type, p_brand, CAST(SUM(ps) AS DOUBLE) AS sumsales
           |    FROM (
           |      SELECT p_type, p_brand,
-          |        dsum8_dec(l_extendedprice * (1 - l_discount)) AS ps
+          |        SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))) AS ps
           |      FROM lineitem JOIN part ON p_partkey = l_partkey
           |      GROUP BY p_type, p_brand) preagg
           |    GROUP BY ROLLUP (p_type, p_brand)) agg) ranked
@@ -2717,10 +2716,10 @@ object Tpcds {
         |     AND MAX(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) = 1),
         |periods AS (
         |  SELECT p_brand,
-        |    dsum8_dec(CASE WHEN year(o_orderdate) = 1997
-        |      THEN l_extendedprice * (1 - l_discount) END) AS cur_s,
-        |    dsum8_dec(CASE WHEN year(o_orderdate) = 1996
-        |      THEN l_extendedprice * (1 - l_discount) END) AS prev_s
+        |    SUM(CAST(CASE WHEN year(o_orderdate) = 1997
+        |      THEN l_extendedprice * (1 - l_discount) END AS DECIMAL(30,8))) AS cur_s,
+        |    SUM(CAST(CASE WHEN year(o_orderdate) = 1996
+        |      THEN l_extendedprice * (1 - l_discount) END AS DECIMAL(30,8))) AS prev_s
         |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
         |  JOIN part ON p_partkey = l_partkey
         |  WHERE year(o_orderdate) IN (1996, 1997)

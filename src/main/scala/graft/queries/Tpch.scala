@@ -23,7 +23,8 @@ object Tpch {
   // nondeterministic partial-agg order and DuckDB's serial sum agree bitwise.
   // Rides the dsum8 fixed-point aggregate — bitwise-identical to
   // sum(c.cast(DecimalType(30, 8))).cast("double") (Dsum8Spec) at a third
-  // of the per-row cost (no BigDecimal boxing in the agg buffer).
+  // of the per-row cost (no BigDecimal boxing in the agg buffer), which
+  // graft.FixedPointSum gives the plain form too, minus this double output.
   private def dsum(c: org.apache.spark.sql.Column) =
     call_function("dsum8", c)
 

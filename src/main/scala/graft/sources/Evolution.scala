@@ -64,13 +64,6 @@ object Evolution {
     require(!reserved(name), s"column name '$name' is reserved by the engine")
   }
 
-  /** Driver-side file-name sequence — the same parse [[MorDelete.fileSeq]]
-    * performs per row, applied once per FILE here. */
-  private[sources] def fseqOf(f: String): Long = {
-    val name = java.nio.file.Paths.get(f).getFileName.toString
-    "^part-mor(\\d+)-".r.findFirstMatchIn(name).map(_.group(1).toLong).getOrElse(0L)
-  }
-
   private[sources] def logicalSchema(st: State): StructType =
     StructType(st.schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
 
@@ -113,7 +106,7 @@ object Evolution {
     }
     val partSet = MorDelete.partitionColsFromPaths(path, st)
       .map(_.toLowerCase).toSet
-    val groups = st.dataFiles.groupBy(f => physicalNames(st, fseqOf(f)))
+    val groups = st.dataFiles.groupBy(f => physicalNames(st, MorDelete.nameSeq(f)))
     val parts = groups.toSeq.sortBy(_._1.mkString(",")).map { case (phys, files) =>
       if (partSet.isEmpty) {
         val physSchema = StructType(

@@ -567,18 +567,19 @@ object MorDelete {
       coalesce(parsed.cast("long"), lit(0L))).otherwise(lit(0L))
   }
 
-  /** Driver-side twin of [[fileSeq]] over one file NAME: same token parse,
-    * same malformed-token → 0 (the column coalesces its failed cast to 0
-    * for the same reason) — ONE shared rule, so a planning-time file
-    * routing ([[readChanges]]) and the per-row column can never classify
-    * the same file differently (the r17 regex `part-mor(\d+)-` matched
-    * mid-name where the column's `/part-mor` anchor would not). */
-  private[graft] def nameSeq(name: String): Long =
+  /** Driver-side twin of [[fileSeq]] over one file path or bare name:
+    * same token parse of the file NAME, same malformed-token → 0 (the
+    * column coalesces its failed cast to 0 for the same reason) — ONE
+    * shared rule, so a planning-time file routing ([[readChanges]]),
+    * [[maxSeq]], schema evolution's per-file epoch lookup and the per-row
+    * column can never classify the same file differently (the r17 regex
+    * `part-mor(\d+)-` matched mid-name where the column's `/part-mor`
+    * anchor would not). */
+  private[graft] def nameSeq(file: String): Long = {
+    val name = Paths.get(file).getFileName.toString
     if (!name.startsWith("part-mor")) 0L
-    else {
-      val tok = name.drop("part-mor".length).takeWhile(_ != '-')
-      scala.util.Try(tok.toLong).getOrElse(0L)
-    }
+    else scala.util.Try(name.drop("part-mor".length).takeWhile(_ != '-').toLong).getOrElse(0L)
+  }
 
   /** Max sequence present anywhere (data file names + sidecar batch
     * names + manifest names), 0 if none — a driver-side file listing,
@@ -589,10 +590,7 @@ object MorDelete {
     * the (dead) files that carried it. */
   private[sources] def maxSeq(spark: SparkSession, path: String): Long = {
     val dataMax = walkData(path)
-      .flatMap { f =>
-        val m = "part-mor(\\d+)-".r.findFirstMatchIn(Paths.get(f).getFileName.toString)
-        m.map(_.group(1).toLong)
-      }.foldLeft(0L)(math.max)
+      .map(nameSeq).foldLeft(0L)(math.max)
     val sideMax = batches(path).map(_._1).foldLeft(0L)(math.max)
     val maniMax = manifests(path).map(_.seq).foldLeft(0L)(math.max)
     math.max(math.max(dataMax, sideMax), maniMax)
@@ -1044,15 +1042,13 @@ object MorDelete {
           spark.read.option("basePath", path).schema(s).parquet(fs: _*)
             .withColumn("__mor_fseq", seqCol)
         }
-        val anyInRange = atTo.dataFiles.exists(f =>
-          nameSeq(Paths.get(f).getFileName.toString) > lo)
+        val anyInRange = atTo.dataFiles.exists(nameSeq(_) > lo)
         if (anyInRange) {
           // pre-anchor files can only matter when tombstones exist —
           // without any, scan just the in-range files
           val fs =
             if (seqsOpt.nonEmpty) atTo.dataFiles
-            else atTo.dataFiles.filter(f =>
-              nameSeq(Paths.get(f).getFileName.toString) > lo)
+            else atTo.dataFiles.filter(nameSeq(_) > lo)
           val raw = scan(fs)
           val cols = raw.columns.toSeq.filterNot(_ == "__mor_fseq")
           (combinedEvents(raw, cols), cols)
@@ -1573,8 +1569,7 @@ object MorDelete {
     * exact, because a row's per-row sequence IS [[nameSeq]] of its file's
     * name (one shared parse, pinned by spec). */
   private def filesMaxSeq(files: Seq[String]): Long =
-    files.map(f => nameSeq(Paths.get(f).getFileName.toString))
-      .foldLeft(0L)(math.max)
+    files.map(nameSeq).foldLeft(0L)(math.max)
 
   private def resolvedOf(spark: SparkSession, path: String, st: State,
       seq: Long): DataFrame = {

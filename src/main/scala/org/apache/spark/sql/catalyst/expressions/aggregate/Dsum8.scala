@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * `CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)` — the engine's canonical
   * exact-decimal-sum pattern (Q.scala: associative decimal addition keeps
   * partial-aggregation order from perturbing low bits) — at a fraction of
-  * the per-row cost.
+  * the per-row cost. The `dsum8`/`dsum8_dec` functions call it on a
+  * DOUBLE; the optimizer rule `graft.FixedPointSum` hands it the
+  * DECIMAL(30,8) input of the idiom's sum, in any query on a graft session.
   *
   * Why: the decimal formulation's 38-digit sum buffer exceeds Spark's
   * compact-long decimal range, so every update pays BigDecimal boxing plus
@@ -33,15 +35,16 @@ import org.apache.spark.sql.types._
   * 2^127/9.2e18 ≈ 1.8e19 rows of maximal magnitude), and the final
   * `BigDecimal(unscaled, 8).doubleValue()` is the same correctly-rounded
   * conversion `CAST(DECIMAL AS DOUBLE)` performs. Bitwise equality is
-  * spec-locked (Dsum8Spec) and every converted query re-proves it against
-  * the DuckDB oracle, which still runs the decimal formulation.
+  * spec-locked (Dsum8Spec) and every query the rule converts re-proves it
+  * against the DuckDB oracle, which still runs the decimal formulation.
   *
   * Domain: finite |x| < 9.2e10 (unscaled must fit a signed long). A
   * FINITE out-of-range input RAISES — loud refusal rather than the silent
   * truncation `toUnscaledLong` would produce; the decimal formulation
   * would have continued (scale-8 money above 92 billion per ROW is
-  * outside every monetary column this engine declares), and converted
-  * queries accept the stricter-and-loud contract. NaN and ±Infinity
+  * outside every monetary column this engine declares); through the rule
+  * that reaches every query using the idiom (README "Known divergences").
+  * NaN and ±Infinity
   * follow the decimal formulation exactly: `CAST(x AS DECIMAL)` is null
   * for them, so the row contributes nothing (Dsum8Spec non-finite leg).
   */
@@ -49,7 +52,8 @@ case class Dsum8(child: Expression, exactDecimal: Boolean = false)
   extends DeclarativeAggregate with ImplicitCastInputTypes with UnaryLike[Expression] {
 
   override def prettyName: String = if (exactDecimal) "dsum8_dec" else "dsum8"
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
+  override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(DoubleType, Dec30_8))
+  private def decimalIn = child.dataType == Dec30_8
   // `dsum8_dec` keeps the exact DECIMAL(38,8) sum — the partial-aggregate
   // building block for two-level (pre-aggregate, then ROLLUP/regroup)
   // rewrites where the OUTER decimal re-sum must stay exact and the final
@@ -95,18 +99,22 @@ case class Dsum8(child: Expression, exactDecimal: Boolean = false)
     * matching the cast's null-skip keeps the identity exact on every
     * input (ADVICE_r17, Dsum8Spec non-finite leg). */
   private lazy val skipped: Expression =
-    Or(IsNull(child), Or(IsNaN(child),
+    if (decimalIn) IsNull(child)
+    else Or(IsNull(child), Or(IsNaN(child),
       EqualTo(Abs(child, failOnError = false), Literal(Double.PositiveInfinity))))
 
   /** Scale-8 unscaled long of the input row — the identical
-    * `Cast(x, DECIMAL(30,8))` the decimal formulation evaluates, with a
+    * `Cast(x, DECIMAL(30,8))` the decimal formulation evaluates (or, on a
+    * DECIMAL(30,8) input, that formulation's own value), with a
     * loud guard where the (finite) unscaled value would not fit a long.
     * Evaluated only on non-skipped rows, so the magnitude compare never
     * sees NaN/Inf.
     */
   private lazy val unscaled: Expression = {
-    val dec = Cast(child, DecimalType(30, 8))
-    val tooBig = GreaterThanOrEqual(Abs(child, failOnError = false), Literal(9.2e10))
+    val dec = if (decimalIn) child else Cast(child, Dec30_8)
+    val limit =
+      if (decimalIn) Literal(Decimal(9200000000000000000L, 30, 8), Dec30_8) else Literal(9.2e10)
+    val tooBig = GreaterThanOrEqual(Abs(child, failOnError = false), limit)
     If(tooBig,
       Cast(new RaiseError(Literal(
         s"dsum8: |input| >= 9.2e10 exceeds the exact fixed-point domain")), LongType),
@@ -131,6 +139,8 @@ case class Dsum8(child: Expression, exactDecimal: Boolean = false)
 
   override protected def withNewChildInternal(newChild: Expression): Dsum8 =
     copy(child = newChild)
+
+  private val Dec30_8 = DecimalType(30, 8)
 }
 
 /** `(hi, lo)` signed-128-bit unscaled → double via the exact

@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Dsum8}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Dsum8 ≡ CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE), bitwise.
+/** Dsum8 ≡ CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE), bitwise, and
+  * [[FixedPointSum]] swaps it in exactly where that identity holds.
   * Every converted bench/oracle query leans on this identity; the DuckDB
   * oracle keeps running the decimal formulation, so these legs prove the
-  * two plans agree bit-for-bit before the oracle ever sees a result.
+  * two plans agree bit-for-bit before the oracle ever sees a result. The
+  * decimal reference runs with the rule excluded (checked on its plan).
   */
 class Dsum8Spec extends AnyFunSuite {
   private lazy val spark = Engine.session(cores = 4, app = "dsum8-spec")
@@ -19,16 +23,48 @@ class Dsum8Spec extends AnyFunSuite {
     case other => other
   }
 
-  /** Runs both formulations over (g, x) and compares per-group bitwise. */
+  private val excluded = "spark.sql.optimizer.excludedRules"
+
+  /** Runs `body` with [[FixedPointSum]] excluded from the optimizer, so a
+    * decimal formulation built and collected inside keeps Spark's sum. */
+  private def ruleOff[T](body: => T): T = {
+    spark.conf.set(excluded, FixedPointSum.ruleName)
+    try body finally spark.conf.unset(excluded)
+  }
+
+  /** Dsum8 aggregates in `df`'s optimized plan. */
+  private def dsum8s(df: DataFrame): Seq[AggregateExpression] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case ae @ AggregateExpression(_: Dsum8, _, _, _, _) => ae
+    }))
+
+  private def byGroup(df: DataFrame): Map[Any, Any] =
+    df.collect().map(r => r.get(0) -> bits(r.get(1))).toMap
+
+  /** The decimal reference for `agg` over `df`: Spark's own sum, with the
+    * rule excluded — asserted on the plan, so the identity legs never
+    * compare Dsum8 with itself. */
+  private def reference(df: DataFrame, agg: org.apache.spark.sql.Column): Map[Any, Any] =
+    ruleOff {
+      val ref = df.groupBy("g").agg(agg.as("s"))
+      assert(dsum8s(ref).isEmpty, ref.queryExecution.optimizedPlan)
+      byGroup(ref)
+    }
+
+  /** Runs the decimal formulation (Spark's sum, and the rule's rewrite of
+    * it) and `dsum8` over (g, x); compares per-group bitwise. */
   private def check(df: DataFrame, clue: String): Unit = {
-    val dec = df.groupBy("g")
-      .agg(sum(col("x").cast(DecimalType(30, 8))).cast("double").as("s"))
-      .collect().map(r => r.get(0) -> bits(r.get(1))).toMap
-    val fast = df.groupBy("g")
-      .agg(expr("dsum8(x)").as("s"))
-      .collect().map(r => r.get(0) -> bits(r.get(1))).toMap
-    assert(fast.keySet == dec.keySet, clue)
-    dec.foreach { case (k, v) => assert(fast(k) == v, s"$clue group=$k") }
+    val decimal = sum(col("x").cast(DecimalType(30, 8))).cast("double")
+    val dec = reference(df, decimal)
+    val fast = byGroup(df.groupBy("g").agg(expr("dsum8(x)").as("s")))
+    val ruled = df.groupBy("g").agg(decimal.as("s"))
+    assert(dsum8s(ruled).size == 1, clue)
+    val viaRule = byGroup(ruled)
+    assert(fast.keySet == dec.keySet && viaRule.keySet == dec.keySet, clue)
+    dec.foreach { case (k, v) =>
+      assert(fast(k) == v, s"$clue group=$k")
+      assert(viaRule(k) == v, s"$clue (rule) group=$k")
+    }
   }
 
   test("random doubles incl. negatives, nulls, empty-ish groups — bitwise equal") {
@@ -72,12 +108,16 @@ class Dsum8Spec extends AnyFunSuite {
     // where the decimal formulation returns a value; just inside, the two
     // plans agree bitwise
     import spark.implicits._
-    Seq(1.0e11, 9.2e10, -9.2e10).foreach { x =>
-      val e = intercept[Exception] {
-        Seq((1, x)).toDF("g", "x").groupBy("g").agg(expr("dsum8(x)")).collect()
+    // the decimal idiom raises too: FixedPointSum converts it on a graft
+    // session (README "Known divergences")
+    Seq("dsum8(x)", "SUM(CAST(x AS DECIMAL(30,8)))").foreach { agg =>
+      Seq(1.0e11, 9.2e10, -9.2e10).foreach { x =>
+        val e = intercept[Exception] {
+          Seq((1, x)).toDF("g", "x").groupBy("g").agg(expr(agg)).collect()
+        }
+        assert(e.getMessage.contains("dsum8") ||
+          Option(e.getCause).exists(_.getMessage.contains("dsum8")), s"$agg x=$x: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("dsum8") ||
-        Option(e.getCause).exists(_.getMessage.contains("dsum8")), s"x=$x: ${e.getMessage}")
     }
     Seq(9.19e10, -9.19e10).foreach(x => check(Seq((1, x)).toDF("g", "x"), s"x=$x"))
   }
@@ -96,65 +136,123 @@ class Dsum8Spec extends AnyFunSuite {
     check(rows.toDF("g", "x"), "non-finite bank")
   }
 
-  test("fixedPointRewrite rewrites exactly the full pattern and nothing else") {
-    // full pattern, incl. a CASE arm with a quoted literal and a nested paren
-    val in =
-      """SELECT CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))) AS DOUBLE) AS a,
-        |  ROUND(CAST(SUM(CAST(CASE WHEN n = 'X(' THEN v ELSE 0 END AS DECIMAL(30,8))) AS DOUBLE), 2) AS b,
-        |  CAST(SUM(CAST(q * q AS DECIMAL(38,8))) AS DOUBLE) AS c
-        |FROM t
-        |HAVING SUM(CAST(l_quantity AS DECIMAL(30,8))) > 200""".stripMargin
-    val out = Q.fixedPointRewrite(in)
-    assert(out.contains("dsum8(l_extendedprice * (1 - l_discount)) AS a"))
-    assert(out.contains("ROUND(dsum8(CASE WHEN n = 'X(' THEN v ELSE 0 END), 2) AS b"))
-    // other precision untouched; bare HAVING sum becomes the decimal-out
-    // variant (type- and value-identical, so the compare is unchanged)
-    assert(out.contains("CAST(SUM(CAST(q * q AS DECIMAL(38,8))) AS DOUBLE) AS c"))
-    assert(out.contains("HAVING dsum8_dec(l_quantity) > 200"))
-    assert(!out.contains("SUM(CAST(l_quantity"))
-    // FILTER (WHERE …) stays on the built-in SUM (the temp-function path
-    // cannot carry a filter clause)
-    val f = "SELECT CAST(SUM(CAST(v AS DECIMAL(30,8))) FILTER (WHERE v > 0) AS DOUBLE) AS a,\n" +
-      "  SUM(CAST(v AS DECIMAL(30,8))) FILTER (WHERE v < 0) AS b FROM t"
-    assert(Q.fixedPointRewrite(f) == f)
-  }
-
-  test("fixedPointRewrite: decimal-ROUND form rewrites to dsum8_dec") {
-    val in =
-      """SELECT CAST(ROUND(SUM(CAST(sales_price AS DECIMAL(30,8))), 2) AS DOUBLE) AS s,
-        |  ROUND(CAST(SUM(CAST(v AS DECIMAL(30,8))) AS DOUBLE), 6) AS r,
-        |  CAST(ROUND(SUM(CAST(w AS DECIMAL(30,8))), x) AS DOUBLE) AS bad
-        |FROM t""".stripMargin
-    val out = Q.fixedPointRewrite(in)
-    assert(out.contains("CAST(ROUND(dsum8_dec(sales_price), 2) AS DOUBLE) AS s"))
-    assert(out.contains("ROUND(dsum8(v), 6) AS r")) // double-ROUND form rides pass 1
-    // non-literal scale: pass 2 skips it, pass 3's bare-sum rewrite still
-    // applies (value-identical decimal out; ROUND sees the same value)
-    assert(out.contains("CAST(ROUND(dsum8_dec(w), x) AS DOUBLE) AS bad"))
-    // dsum8_dec ≡ the exact decimal sum, bitwise through ROUND + double cast
+  /** Registers (g, x, d, f, i, n, v) as `fps_t`: x DOUBLE, d DECIMAL(12,2),
+    * f FLOAT, i INT, n BIGINT, v STRING holding the idiom as text. */
+  private def fpsTable(): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
-    val df = (1 to 5000).map(i => (i % 7, i * 0.37 - 900)).toDF("g", "x")
-    val dec = df.groupBy("g")
-      .agg(round(sum(col("x").cast(DecimalType(30, 8))), 2).cast("double").as("s"))
-      .collect().map(r => r.get(0) -> bits(r.get(1))).toMap
-    val fast = df.groupBy("g")
-      .agg(round(expr("dsum8_dec(x)"), 2).cast("double").as("s"))
-      .collect().map(r => r.get(0) -> bits(r.get(1))).toMap
-    assert(fast == dec)
+    val df = (1 to 4000).map { i =>
+      val x = (i % 97) * 13.37 - 500.0 + i * 1e-3
+      (i % 7, x, BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP),
+        x.toFloat, i * 31 - 60000, i.toLong * 1000003L,
+        "CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)")
+    }.toDF("g", "x", "d", "f", "i", "n", "v")
+      .withColumn("d", col("d").cast(DecimalType(12, 2)))
+    df.createOrReplaceTempView("fps_t")
+    df
   }
 
-  test("fixedPointRewrite never fires inside a string literal") {
-    // the OUTER head scan is quote-aware (r18, ADVICE_r17): a pattern
-    // occurring inside a SQL string literal must ride through verbatim
-    // while the real aggregate around it still rewrites
-    val in = "SELECT 'CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)' AS lit_a, " +
-      "'SUM(CAST(y AS DECIMAL(30,8)))' AS lit_b, " +
-      "CAST(SUM(CAST(v AS DECIMAL(30,8))) AS DOUBLE) AS real_sum FROM t"
-    val out = Q.fixedPointRewrite(in)
-    assert(out.contains("'CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)' AS lit_a"))
-    assert(out.contains("'SUM(CAST(y AS DECIMAL(30,8)))' AS lit_b"))
-    assert(out.contains("dsum8(v) AS real_sum"))
+  /** `SELECT g, <agg> AS s FROM fps_t GROUP BY g`: the rule's plan must hold
+    * `n` Dsum8 aggregates and, when it holds any, agree bitwise with the
+    * same text run with the rule excluded. */
+  private def sqlLeg(agg: String, n: Int): Unit = {
+    val q = s"SELECT g, $agg AS s FROM fps_t GROUP BY g"
+    val ruled = spark.sql(q)
+    assert(dsum8s(ruled).size == n, s"$agg\n${ruled.queryExecution.optimizedPlan}")
+    if (n > 0) {
+      val dec = ruleOff {
+        val ref = spark.sql(q)
+        assert(dsum8s(ref).isEmpty, agg)
+        byGroup(ref)
+      }
+      assert(byGroup(ruled) == dec, agg)
+    }
+  }
+
+  test("FixedPointSum converts the idiom in any spelling, FILTER clause kept") {
+    fpsTable()
+    sqlLeg("CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)", 1)
+    sqlLeg("cast(sum(cast(x as decimal(30,8))) as double)", 1)
+    sqlLeg("CAST( SUM (  CAST( x  AS  DECIMAL( 30 , 8 ) ) )  AS DOUBLE )", 1)
+    sqlLeg("sum(cast(x as decimal(30, 8)))", 1)
+    // integral inputs ride the dsum8 function's implicit DOUBLE cast
+    sqlLeg("CAST(SUM(CAST(i AS DECIMAL(30,8))) AS DOUBLE)", 1)
+    sqlLeg("SUM(CAST(n AS DECIMAL(30,8)))", 1)
+    // the optimizer pushes the cast into CASE branches: ELSE 0 becomes 0E-8
+    sqlLeg("CAST(SUM(CAST(CASE WHEN g = 1 THEN x ELSE 0 END AS DECIMAL(30,8))) AS DOUBLE)", 1)
+    sqlLeg("SUM(CAST(CASE WHEN g = 1 THEN x END AS DECIMAL(30,8)))", 1)
+    sqlLeg("SUM(CASE WHEN g = 1 THEN CAST(x AS DECIMAL(30,8)) " +
+      "ELSE CAST(1234567890.12345678 AS DECIMAL(30,8)) END)", 1)
+    // decimal-ROUND form: ROUND runs on the identical exact decimal
+    sqlLeg("CAST(ROUND(SUM(CAST(x AS DECIMAL(30,8))), 2) AS DOUBLE)", 1)
+    val filtered = "CAST(SUM(CAST(x AS DECIMAL(30,8))) FILTER (WHERE x > 0) AS DOUBLE)"
+    sqlLeg(filtered, 1)
+    val fae = dsum8s(spark.sql(s"SELECT g, $filtered AS s FROM fps_t GROUP BY g"))
+    assert(fae.forall(_.filter.isDefined), fae)
+  }
+
+  test("FixedPointSum converts window sums, SQL and DataFrame, through the window's child") {
+    // a range source, not a local one: the analyzer projects a window
+    // sum's CAST into the window's child, which a local relation would
+    // fold away before the optimizer rule sees it
+    spark.range(1, 4001).select((col("id") % 7).cast("int").as("g"),
+      ((col("id") % 97) * 13.37 - 500.0 + col("id") * 1e-3).as("x"))
+      .createOrReplaceTempView("fps_r")
+    // every row, not one per group: a running sum differs row by row
+    // (Double.toString round-trips, so equal strings are equal bits)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def leg(n: Int, q: () => DataFrame): Unit = {
+      val ruled = q()
+      assert(dsum8s(ruled).size == n, ruled.queryExecution.optimizedPlan)
+      val dec = ruleOff {
+        val ref = q()
+        assert(dsum8s(ref).isEmpty, ref.queryExecution.optimizedPlan)
+        rows(ref)
+      }
+      assert(rows(ruled) == dec)
+    }
+    leg(1, () => spark.table("fps_r").select(col("g"),
+      sum(col("x").cast(DecimalType(30, 8))).over(Window.partitionBy("g")).cast("double").as("s")))
+    leg(1, () => spark.sql("SELECT g, CAST(SUM(CAST(x AS DECIMAL(30,8))) " +
+      "OVER (PARTITION BY g ORDER BY x) AS DOUBLE) AS s FROM fps_r"))
+    // another window between the sum's window and the projection
+    leg(1, () => spark.sql("SELECT g, RANK() OVER (ORDER BY x) AS r, " +
+      "CAST(SUM(CAST(x AS DECIMAL(30,8))) OVER (PARTITION BY g) AS DOUBLE) AS s FROM fps_r"))
+    // the window sums an aggregate's output: its child is the Aggregate
+    leg(2, () => spark.sql("SELECT g, CAST(SUM(CAST(t AS DECIMAL(30,8))) OVER () AS DOUBLE) AS s " +
+      "FROM (SELECT g, CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS t FROM fps_r GROUP BY g)"))
+  }
+
+  test("dsum8_dec and the decimal-ROUND form: bitwise equal to the decimal sum through ROUND") {
+    import spark.implicits._
+    val df = (1 to 5000).map(i => (i % 7, i * 0.37 - 900)).toDF("g", "x")
+    val rounded = round(sum(col("x").cast(DecimalType(30, 8))), 2).cast("double")
+    val dec = reference(df, rounded)
+    val fast = byGroup(df.groupBy("g").agg(round(expr("dsum8_dec(x)"), 2).cast("double")))
+    val ruled = df.groupBy("g").agg(rounded)
+    assert(dsum8s(ruled).size == 1)
+    assert(fast == dec && byGroup(ruled) == dec)
+  }
+
+  test("FixedPointSum leaves other precisions, DISTINCT and non-DOUBLE inputs alone") {
+    fpsTable()
+    sqlLeg("CAST(SUM(CAST(x AS DECIMAL(38,8))) AS DOUBLE)", 0)
+    sqlLeg("CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE)", 0)
+    sqlLeg("CAST(SUM(DISTINCT CAST(x AS DECIMAL(30,8))) AS DOUBLE)", 0)
+    sqlLeg("CAST(SUM(CAST(d AS DECIMAL(30,8))) AS DOUBLE)", 0)
+    sqlLeg("CAST(SUM(CAST(f AS DECIMAL(30,8))) AS DOUBLE)", 0)
+  }
+
+  test("FixedPointSum never touches a string literal holding the idiom") {
+    // the idiom as text — in a literal and in a column — rides through
+    // verbatim while the real aggregate beside it is converted
+    fpsTable()
+    val lit = "CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE)"
+    val df = spark.sql(
+      s"SELECT '$lit' AS lit_a, MAX(v) AS col_v, " +
+        "CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS real_sum FROM fps_t")
+    assert(dsum8s(df).size == 1)
+    val r = df.collect().head
+    assert(r.getString(0) == lit && r.getString(1) == lit)
   }
 
   test("empty input and WHERE-false input return null like SUM") {

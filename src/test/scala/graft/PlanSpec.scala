@@ -268,6 +268,20 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("PushedFilters: ["), "band predicates must reach the scans")
   }
 
+  test("fixed-point sum: q01, q67 and the FILTER aggregate carry Dsum8's hi/lo buffers") {
+    // plan only: q67 and agg_filter_clause spell the plain decimal sum, so
+    // only FixedPointSum puts the two-long buffer there — a lost rule would
+    // stay oracle-green
+    for (name <- Seq("tpch_q01_pricing_summary", "tpcds_q67_rollup_topk", "agg_filter_clause")) {
+      val plan = Registry.all(name).fn(spark, sfDir).queryExecution.optimizedPlan
+      val buffers = plan.flatMap(_.expressions.flatMap(_.collect {
+        case d: org.apache.spark.sql.catalyst.expressions.aggregate.Dsum8 =>
+          d.aggBufferAttributes.map(_.name)
+      }))
+      assert(buffers.nonEmpty && buffers.forall(_.take(2) == Seq("hi", "lo")), s"$name:\n$plan")
+    }
+  }
+
   test("tpcds q67/q89/q98 window-over-agg: window sits above the aggregate") {
     for (name <- Seq("tpcds_q67_rollup_topk", "tpcds_q89_monthly_deviation",
         "tpcds_q98_class_ratio", "tpcds_q47_lag_lead_deviation")) {

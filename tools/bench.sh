@@ -6,11 +6,12 @@
 # parse-the-last-stdout-line driver can never see bare JSON (BENCH_r01..r04
 # all recorded parsed: null). Two defenses, either alone sufficient:
 #   1. `sbt --error` suppresses sbt's [info]/[success] decoration;
-#   2. graft.Bench persists the same JSON to bench.json, and this script
+#   2. graft.Bench persists the same JSON to target/bench.json (build
+#      output; the tracked bench.json is left alone), and this script
 #      re-prints that file as its very last stdout line.
 #
 # Usage: tools/bench.sh   (honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS)
 set -e
 cd "$(dirname "$0")/.."
 sbt --error "runMain graft.Bench" 1>&2
-cat bench.json
+cat target/bench.json

@@ -7,7 +7,8 @@
 #                             reported), not OOM.
 #   tools/stress.sh skew    — one hot l_orderkey carrying ~10% of a 10x
 #                             fact through a shuffle join: AQE must split
-#                             the skewed partition (numSkewedPartitions>0).
+#                             the skewed partition (numSkewedPartitions>0;
+#                             the run exits non-zero otherwise).
 #   tools/stress.sh asofspill — constant-key as-of at R=40 under a 4g
 #                             heap: the single-window arm's one-partition
 #                             sort must COMPLETE by spilling; the sliced
@@ -21,7 +22,6 @@ if [ "$mode" = "spill" ]; then
   SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-4g}" sbt --error "runMain graft.StressRehearsal spill"
 elif [ "$mode" = "asofspill" ]; then
   SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-4g}" SPARK_GRAFT_STRESS_R="${SPARK_GRAFT_STRESS_R:-40}" \
-    SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-8}" \
     sbt --error "runMain graft.StressRehearsal asofspill"
 else
   sbt --error "runMain graft.StressRehearsal $mode"
