@@ -27,28 +27,32 @@ object ResolveReduceAgg extends Rule[LogicalPlan] {
 
 /** Runs the engine's exact money sum `SUM(CAST(e AS DECIMAL(30,8)))` on
   * Dsum8's two-long buffer: a non-DISTINCT sum of a DECIMAL(30,8) input
-  * `c`, in an `Aggregate` or a `Window`, becomes `Dsum8(c, exactDecimal =
+  * `c`, in an `Aggregate` or a `Window`, becomes `Dsum8(…, exactDecimal =
   * true)` (`dsum8_dec`) — same per-row decimals, same DECIMAL(38,8) type
   * and value (Dsum8Spec), same FILTER and result id, so whatever sits
   * above it is unchanged. It fires only when `c` is the cast of a DOUBLE
   * or integral `e`, because Dsum8 raises at |e| ≥ 9.2e10 where the decimal
-  * sum goes on. By the time the rule runs, the optimizer may have pushed
-  * the cast into CASE / IF branches beside constants, and a window's input
-  * is a column defined further down. Exclude it with
-  * `spark.sql.optimizer.excludedRules = graft.FixedPointSum`.
+  * sum goes on. The optimizer may have pushed that cast into CASE / IF
+  * branches beside constants; Dsum8 then gets the same branches over the
+  * DOUBLE, which it casts itself. A window's input is a column defined
+  * further down, which Dsum8 takes as the decimal it is. Exclude the rule
+  * with `spark.sql.optimizer.excludedRules = graft.FixedPointSum`.
   */
 object FixedPointSum extends Rule[LogicalPlan] {
   private val Dec30_8 = DecimalType(30, 8)
-  private val FromTypes = Set[DataType](DoubleType, ByteType, ShortType, IntegerType, LongType)
+  private val Integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformWithPruning(_.containsPattern(AGGREGATE_EXPRESSION)) {
       case p @ (_: Aggregate | _: Window) =>
         lazy val defs = definitions(p.children.head)
         p.transformExpressions {
-          case ae @ AggregateExpression(Sum(c, _), _, false, _, _)
-              if c.dataType == Dec30_8 && fromDouble(c, defs) =>
-            ae.copy(aggregateFunction = Dsum8(c, exactDecimal = true))
+          case ae @ AggregateExpression(Sum(c, _), _, false, _, _) if c.dataType == Dec30_8 =>
+            val in = c match {
+              case a: Attribute => defs.get(a.exprId).flatMap(asDouble).map(_ => a)
+              case _ => asDouble(c)
+            }
+            in.fold(ae)(i => ae.copy(aggregateFunction = Dsum8(i, exactDecimal = true)))
         }
     }
 
@@ -61,15 +65,22 @@ object FixedPointSum extends Rule[LogicalPlan] {
     }
   }
 
-  /** Whether each value of `c` is a DOUBLE or integral cast, or a constant. */
-  private def fromDouble(c: Expression, defs: => Map[ExprId, Expression]): Boolean = c match {
-    case Cast(e, Dec30_8, _, _) => FromTypes.contains(e.dataType)
-    case _: Literal => true
+  /** A DOUBLE whose DECIMAL(30,8) cast is `c` on every row, when each value
+    * of `c` is a DOUBLE or integral cast or a constant inside Dsum8's domain
+    * that a DOUBLE holds exactly. */
+  private def asDouble(c: Expression): Option[Expression] = c match {
+    case Cast(e, Dec30_8, _, _) if e.dataType == DoubleType => Some(e)
+    case Cast(e, Dec30_8, _, _) if Integral(e.dataType) => Some(Cast(e, DoubleType))
+    case Literal(null, _) => Some(Literal(null, DoubleType))
+    case Literal(d: Decimal, _) => Some(Literal(d.toDouble))
+      .filter(l => d.toDouble.abs < 9.2e10 && Cast(l, Dec30_8).eval() == d)
     case CaseWhen(branches, other) =>
-      branches.forall(b => fromDouble(b._2, defs)) && other.forall(fromDouble(_, defs))
-    case If(_, t, f) => fromDouble(t, defs) && fromDouble(f, defs)
-    case a: Attribute => defs.get(a.exprId).exists(fromDouble(_, defs))
-    case _ => false
+      val values = branches.map(b => asDouble(b._2))
+      val otherD = other.map(asDouble)
+      if (values.contains(None) || otherD.contains(None)) None
+      else Some(CaseWhen(branches.map(_._1).zip(values.flatten), otherD.flatten))
+    case If(p, t, f) => for (x <- asDouble(t); y <- asDouble(f)) yield If(p, x, y)
+    case _ => None
   }
 }
 

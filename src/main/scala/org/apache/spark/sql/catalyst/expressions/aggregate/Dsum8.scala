@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * exact-decimal-sum pattern (Q.scala: associative decimal addition keeps
   * partial-aggregation order from perturbing low bits) — at a fraction of
   * the per-row cost. The `dsum8`/`dsum8_dec` functions call it on a
-  * DOUBLE; the optimizer rule `graft.FixedPointSum` hands it the
-  * DECIMAL(30,8) input of the idiom's sum, in any query on a graft session.
+  * DOUBLE; in any query on a graft session, the optimizer rule
+  * `graft.FixedPointSum` hands it the idiom's DOUBLE, or its DECIMAL(30,8)
+  * input where the cast sits in CASE branches or below a window.
   *
   * Why: the decimal formulation's 38-digit sum buffer exceeds Spark's
   * compact-long decimal range, so every update pays BigDecimal boxing plus

@@ -181,7 +181,7 @@ class Dsum8Spec extends AnyFunSuite {
     sqlLeg("CAST(SUM(CAST(CASE WHEN g = 1 THEN x ELSE 0 END AS DECIMAL(30,8))) AS DOUBLE)", 1)
     sqlLeg("SUM(CAST(CASE WHEN g = 1 THEN x END AS DECIMAL(30,8)))", 1)
     sqlLeg("SUM(CASE WHEN g = 1 THEN CAST(x AS DECIMAL(30,8)) " +
-      "ELSE CAST(1234567890.12345678 AS DECIMAL(30,8)) END)", 1)
+      "ELSE CAST(1234567890.125 AS DECIMAL(30,8)) END)", 1)
     // decimal-ROUND form: ROUND runs on the identical exact decimal
     sqlLeg("CAST(ROUND(SUM(CAST(x AS DECIMAL(30,8))), 2) AS DOUBLE)", 1)
     val filtered = "CAST(SUM(CAST(x AS DECIMAL(30,8))) FILTER (WHERE x > 0) AS DOUBLE)"
@@ -240,6 +240,12 @@ class Dsum8Spec extends AnyFunSuite {
     sqlLeg("CAST(SUM(DISTINCT CAST(x AS DECIMAL(30,8))) AS DOUBLE)", 0)
     sqlLeg("CAST(SUM(CAST(d AS DECIMAL(30,8))) AS DOUBLE)", 0)
     sqlLeg("CAST(SUM(CAST(f AS DECIMAL(30,8))) AS DOUBLE)", 0)
+    // a constant outside Dsum8's domain, where the decimal sum goes on, and
+    // one no DOUBLE holds, which Dsum8's own cast could not reproduce
+    sqlLeg("SUM(CASE WHEN g = 1 THEN CAST(x AS DECIMAL(30,8)) " +
+      "ELSE CAST(1e11 AS DECIMAL(30,8)) END)", 0)
+    sqlLeg("SUM(CASE WHEN g = 1 THEN CAST(x AS DECIMAL(30,8)) " +
+      "ELSE CAST(1234567890.12345678 AS DECIMAL(30,8)) END)", 0)
   }
 
   test("FixedPointSum never touches a string literal holding the idiom") {

@@ -268,17 +268,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("PushedFilters: ["), "band predicates must reach the scans")
   }
 
-  test("fixed-point sum: q01, q67 and the FILTER aggregate carry Dsum8's hi/lo buffers") {
-    // plan only: q67 and agg_filter_clause spell the plain decimal sum, so
-    // only FixedPointSum puts the two-long buffer there — a lost rule would
-    // stay oracle-green
-    for (name <- Seq("tpch_q01_pricing_summary", "tpcds_q67_rollup_topk", "agg_filter_clause")) {
+  test("fixed-point sum: q01, q67, q14_2 and the FILTER aggregate carry Dsum8's hi/lo buffers") {
+    // plan only: q67, q14_2 and agg_filter_clause spell the plain decimal
+    // sum, so only FixedPointSum puts the two-long buffer there — a lost
+    // rule would stay oracle-green. Each sums a cast (q14_2's inside CASE
+    // branches), so Dsum8 gets the DOUBLE: a DECIMAL(30,8) input costs
+    // decimal compares per row.
+    for (name <- Seq("tpch_q01_pricing_summary", "tpcds_q67_rollup_topk",
+        "tpcds_q14_2_period_compare", "agg_filter_clause")) {
       val plan = Registry.all(name).fn(spark, sfDir).queryExecution.optimizedPlan
-      val buffers = plan.flatMap(_.expressions.flatMap(_.collect {
-        case d: org.apache.spark.sql.catalyst.expressions.aggregate.Dsum8 =>
-          d.aggBufferAttributes.map(_.name)
+      val dsums = plan.flatMap(_.expressions.flatMap(_.collect {
+        case d: org.apache.spark.sql.catalyst.expressions.aggregate.Dsum8 => d
       }))
-      assert(buffers.nonEmpty && buffers.forall(_.take(2) == Seq("hi", "lo")), s"$name:\n$plan")
+      assert(dsums.nonEmpty && dsums.forall(d =>
+        d.aggBufferAttributes.map(_.name).take(2) == Seq("hi", "lo") &&
+          d.child.dataType == org.apache.spark.sql.types.DoubleType), s"$name:\n$plan")
     }
   }
 
