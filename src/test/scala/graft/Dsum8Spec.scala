@@ -25,11 +25,16 @@ class Dsum8Spec extends AnyFunSuite {
 
   private val excluded = "spark.sql.optimizer.excludedRules"
 
-  /** Runs `body` with [[FixedPointSum]] excluded from the optimizer, so a
-    * decimal formulation built and collected inside keeps Spark's sum. */
-  private def ruleOff[T](body: => T): T = {
+  /** `read` of the decimal reference `q` builds with [[FixedPointSum]]
+    * excluded from the optimizer — asserted on its plan, so the identity
+    * legs never compare Dsum8 with itself. */
+  private def unruled[T](q: => DataFrame)(read: DataFrame => T): T = {
     spark.conf.set(excluded, FixedPointSum.ruleName)
-    try body finally spark.conf.unset(excluded)
+    try {
+      val ref = q
+      assert(dsum8s(ref).isEmpty, ref.queryExecution.optimizedPlan)
+      read(ref)
+    } finally spark.conf.unset(excluded)
   }
 
   /** Dsum8 aggregates in `df`'s optimized plan. */
@@ -41,15 +46,9 @@ class Dsum8Spec extends AnyFunSuite {
   private def byGroup(df: DataFrame): Map[Any, Any] =
     df.collect().map(r => r.get(0) -> bits(r.get(1))).toMap
 
-  /** The decimal reference for `agg` over `df`: Spark's own sum, with the
-    * rule excluded — asserted on the plan, so the identity legs never
-    * compare Dsum8 with itself. */
+  /** The decimal reference for `agg` over `df`: Spark's own sum. */
   private def reference(df: DataFrame, agg: org.apache.spark.sql.Column): Map[Any, Any] =
-    ruleOff {
-      val ref = df.groupBy("g").agg(agg.as("s"))
-      assert(dsum8s(ref).isEmpty, ref.queryExecution.optimizedPlan)
-      byGroup(ref)
-    }
+    unruled(df.groupBy("g").agg(agg.as("s")))(byGroup)
 
   /** Runs the decimal formulation (Spark's sum, and the rule's rewrite of
     * it) and `dsum8` over (g, x); compares per-group bitwise. */
@@ -158,14 +157,7 @@ class Dsum8Spec extends AnyFunSuite {
     val q = s"SELECT g, $agg AS s FROM fps_t GROUP BY g"
     val ruled = spark.sql(q)
     assert(dsum8s(ruled).size == n, s"$agg\n${ruled.queryExecution.optimizedPlan}")
-    if (n > 0) {
-      val dec = ruleOff {
-        val ref = spark.sql(q)
-        assert(dsum8s(ref).isEmpty, agg)
-        byGroup(ref)
-      }
-      assert(byGroup(ruled) == dec, agg)
-    }
+    if (n > 0) assert(byGroup(ruled) == unruled(spark.sql(q))(byGroup), agg)
   }
 
   test("FixedPointSum converts the idiom in any spelling, FILTER clause kept") {
@@ -203,12 +195,7 @@ class Dsum8Spec extends AnyFunSuite {
     def leg(n: Int, q: () => DataFrame): Unit = {
       val ruled = q()
       assert(dsum8s(ruled).size == n, ruled.queryExecution.optimizedPlan)
-      val dec = ruleOff {
-        val ref = q()
-        assert(dsum8s(ref).isEmpty, ref.queryExecution.optimizedPlan)
-        rows(ref)
-      }
-      assert(rows(ruled) == dec)
+      assert(rows(ruled) == unruled(q())(rows))
     }
     leg(1, () => spark.table("fps_r").select(col("g"),
       sum(col("x").cast(DecimalType(30, 8))).over(Window.partitionBy("g")).cast("double").as("s")))
