@@ -209,7 +209,16 @@ class Dsum8Spec extends AnyFunSuite {
       "FROM (SELECT g, CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS t FROM fps_r GROUP BY g)"))
   }
 
-  test("dsum8_dec and the decimal-ROUND form: bitwise equal to the decimal sum through ROUND") {
+  test("fixedPointRewrite: decimal-ROUND form rewrites to dsum8_dec") {
+    // ROUND over the exact decimal sum, or over its DOUBLE: the rule hands
+    // either the exact sum (dsum8_dec), bitwise equal through ROUND
+    fpsTable()
+    Seq("CAST(ROUND(SUM(CAST(x AS DECIMAL(30,8))), 2) AS DOUBLE)",
+      "ROUND(CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE), 6)").foreach { agg =>
+      sqlLeg(agg, 1)
+      val fae = dsum8s(spark.sql(s"SELECT g, $agg AS s FROM fps_t GROUP BY g"))
+      assert(fae.forall(_.aggregateFunction.asInstanceOf[Dsum8].exactDecimal), fae)
+    }
     import spark.implicits._
     val df = (1 to 5000).map(i => (i % 7, i * 0.37 - 900)).toDF("g", "x")
     val rounded = round(sum(col("x").cast(DecimalType(30, 8))), 2).cast("double")
